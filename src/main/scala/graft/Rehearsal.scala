@@ -166,6 +166,9 @@ object Rehearsal {
     * count manifests (hundreds of rows). */
   private def fullPipeline(spark: SparkSession, nRows: Long): Unit = {
     val nSources = 24
+    // saturating multi-core sentinel before and after: the host-load
+    // annotation that makes two rehearsals on a shared host comparable
+    val sentinelPre = Bench.sentinelMtMs()
     val perSource = nRows / nSources
     val base = "/tmp/graft_r281"
     val srcDir = s"$base/sources"
@@ -259,9 +262,11 @@ object Rehearsal {
         .filter(col("prev").isNotNull && col("hk") < col("prev"))
         .count()
     }
+    val sentinelPost = Bench.sentinelMtMs()
+    println(f"  sentinel_mt_ms pre=$sentinelPre%.0f post=$sentinelPost%.0f")
     println(f"SUMMARY_FULL281 nRows=$nRows gen=$genSecs%.0f s convert=$convSecs%.0f s f4rerun=$reconvSecs%.1f s merge=$mergeSecs%.0f s bbox=$bboxSecs%.0f s sortAudit=$sortSecs%.0f s")
     println(f"  merged files=${rowsPerFile.length} rows min=${rowsPerFile.head}%,d median=${rowsPerFile(rowsPerFile.length / 2)}%,d max=${rowsPerFile.last}%,d (cap 10,000,000)")
-    println(f"  bytes/file min=${sizes.head}%,d median=${sizes(sizes.length / 2)}%,d max=${sizes.last}%,d")
+    println(f"  bytes/file min=${sizes.head}%,d median=${sizes(sizes.length / 2)}%,d max=${sizes.last}%,d total=${sizes.sum}%,d")
     println(f"  total rows=$total%,d bbox=(${bbox._1}%.4f, ${bbox._2}%.4f, ${bbox._3}%.4f, ${bbox._4}%.4f) hilbert violations=$viol")
     val expected = perSource * nSources // generation floors nRows/nSources
     require(total == expected, s"row loss: $total != $expected")

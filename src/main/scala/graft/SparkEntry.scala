@@ -6178,13 +6178,8 @@ object SparkEntry {
         .limit(2000)
         .select(col("x"), col("y"), col("l_orderkey").as("okey"))
         .withColumn("geom", st_point(col("x"), col("y")))
-      // zstdLevel 3 here: level 22's per-column-chunk context init costs
-      // ~5 s on 4 tiny files and amortizes to nothing on real ~500 MB
-      // files — the gate pins the sink CONTRACT (range exchange, ordered
-      // disjoint files, zstd codec); level-22-takes-effect is separately
-      // asserted in PipelineSpec
       val tmp = java.nio.file.Files.createTempDirectory("k1sink").toString + "/clustered"
-      graft.operators.GeoNormalize.writeClustered(sample, tmp, numFiles = 4, zstdLevel = 3)
+      graft.operators.GeoNormalize.writeClustered(sample, tmp, numFiles = 4)
       val back = s.read.parquet(tmp)
         .withColumn("hk", hilbert_of_geom(col("geom")))
         .withColumn("file", input_file_name())
@@ -6217,7 +6212,7 @@ object SparkEntry {
         .select(col("x"), col("y"), col("l_orderkey").as("okey"))
         .withColumn("geom", st_point(col("x"), col("y")))
       val tmp = java.nio.file.Files.createTempDirectory("k1prune").toString + "/clustered"
-      graft.operators.GeoNormalize.writeClustered(sample, tmp, numFiles = 4, zstdLevel = 3)
+      graft.operators.GeoNormalize.writeClustered(sample, tmp, numFiles = 4)
       val (pruned, nKept, nTot) = graft.operators.GeoNormalize
         .readGeoParquetPruned(s, tmp, (-180.0, -90.0, -90.0, 0.0))
       pruned
@@ -6247,7 +6242,7 @@ object SparkEntry {
         .select(col("x"), col("y"), col("l_orderkey").as("okey"))
         .withColumn("geom", st_point(col("x"), col("y")))
       val tmp = java.nio.file.Files.createTempDirectory("k1geo").toString + "/clustered"
-      graft.operators.GeoNormalize.writeClustered(sample, tmp, numFiles = 4, zstdLevel = 3)
+      graft.operators.GeoNormalize.writeClustered(sample, tmp, numFiles = 4)
       val conf = s.sparkContext.hadoopConfiguration
       val root = new org.apache.hadoop.fs.Path(tmp)
       val files = root.getFileSystem(conf).listStatus(root).map(_.getPath)

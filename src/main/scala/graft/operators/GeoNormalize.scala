@@ -69,7 +69,7 @@ object GeoNormalize {
 
   /** Spatial clustering + write contract (every reference sink,
     * east_asia.py:72-83): order by Hilbert(lat, lon of centroid), write
-    * ZSTD parquet. `numFiles <= 0` leaves Spark's range-partitioned sort
+    * ZSTD parquet through [[ZstdParquetSink]]. `numFiles <= 0` leaves Spark's range-partitioned sort
     * parallelism intact (the 100TB path: each range partition is written by
     * its own task and is internally Hilbert-ordered, giving the same
     * row-group locality without a single-writer bottleneck); a positive
@@ -85,14 +85,10 @@ object GeoNormalize {
       if (numFiles > 0) keyed.repartitionByRange(numFiles, col("__hk"))
         .sortWithinPartitions("__hk")
       else keyed.sortWithinPartitions("__hk") // caller controls partitioning
-    arranged.drop("__hk")
-      .write.mode("overwrite")
-      .option("compression", "zstd")
-      .option("parquet.compression.codec.zstd.level", zstdLevel.toString)
-      // parquet-mr sizes row groups in bytes, not rows; small groups keep
-      // the reference's row-group-level spatial pruning property (§1.3)
-      .option("parquet.block.size", rowGroupBytes.toString)
-      .parquet(outPath)
+    // parquet-mr sizes row groups in bytes, not rows; small groups keep
+    // the reference's row-group-level spatial pruning property (§1.3)
+    ZstdParquetSink.write(arranged.drop("__hk"), outPath, zstdLevel,
+      "parquet.block.size" -> rowGroupBytes.toString)
     if (geoFooter) writeGeoParquetFooter(df.sparkSession, outPath)
   }
 
@@ -230,18 +226,6 @@ object GeoNormalize {
         spark.read.parquet(path).limit(0) // schema-preserving empty frame
       else spark.read.parquet(kept.map(_.toString): _*)
     (df, kept.length, files.length)
-  }
-
-  /** Hilbert-sorted global order variant: one total sort (range exchange)
-    * across the cluster — the exact reference semantics for single-file
-    * outputs (east_asia.py:75-82). */
-  def writeClusteredSorted(df: DataFrame, outPath: String, zstdLevel: Int = 22): Unit = {
-    val keyed = Scatter(df).withColumn("__hk", hilbert_of_geom(col("geom")))
-    keyed.orderBy("__hk").drop("__hk")
-      .write.mode("overwrite")
-      .option("compression", "zstd")
-      .option("parquet.compression.codec.zstd.level", zstdLevel.toString)
-      .parquet(outPath)
   }
 
   // (footer stamping lives in GeoParquetFooter below so executor tasks call

@@ -64,12 +64,8 @@ object MergeParquet {
       val df = spark.read.parquet(files: _*)
         .withColumn("source", substring_index(input_file_name(), "/", -1))
       val keyed = df.withColumn("__hk", hilbert_of_geom(col("geom")))
-      keyed.repartitionByRange(1, col("__hk")).sortWithinPartitions("__hk")
-        .drop("__hk")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .option("parquet.compression.codec.zstd.level", zstdLevel.toString)
-        .parquet(out)
+      ZstdParquetSink.write(keyed.repartitionByRange(1, col("__hk"))
+        .sortWithinPartitions("__hk").drop("__hk"), out, zstdLevel)
       out
     }
     Concurrency.mapBounded(batches.zipWithIndex, maxConcurrent) {

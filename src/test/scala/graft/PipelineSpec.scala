@@ -204,6 +204,206 @@ class PipelineSpec extends AnyFunSuite {
     assert(s22 < s1, s"level 22 ($s22 B) must beat level 1 ($s1 B)")
   }
 
+  /** ids, repeated names, doubles, long strings and WKB in one partition,
+    * so two writes of it see the same rows in the same order. */
+  private def sinkFrame(n: Int): DataFrame = {
+    val rnd = new scala.util.Random(11)
+    (0 until n).map { i =>
+      val filler = (1 to 12).map(j => s"w${(i * 31 + j * 7) % 97}").mkString(" ")
+      (i.toLong, s"name_${i / 2 % 3000}", rnd.nextDouble(), s"record $i: $filler",
+        GeomLib.pointWkb(100.0 + rnd.nextDouble(), 30.0 + rnd.nextDouble()))
+    }.toDF("id", "name", "v", "text", "geom").coalesce(1)
+  }
+
+  /** Every writer property `ParquetOutputFormat` derives from the conf, each
+    * set away from its default (globally and per `#column`), so a property
+    * the sink dropped would show as a difference from the stock writer. */
+  private val sinkProps = Seq(
+    "parquet.block.size" -> "65536",
+    "parquet.block.row.count.limit" -> "1000000",
+    "parquet.page.size" -> "65536",
+    "parquet.page.row.count.limit" -> "15000",
+    "parquet.page.size.row.check.min" -> "50",
+    "parquet.page.size.row.check.max" -> "5000",
+    "parquet.dictionary.page.size" -> "8192",
+    "parquet.enable.dictionary" -> "false",
+    "parquet.enable.dictionary#name" -> "true",
+    "parquet.writer.version" -> "v2",
+    "parquet.validation" -> "true",
+    "parquet.writer.max-padding" -> "4096",
+    "parquet.page.write-checksum.enabled" -> "false",
+    "parquet.statistics.truncate.length" -> "16",
+    "parquet.columnindex.truncate.length" -> "8",
+    "parquet.column.statistics.enabled" -> "false",
+    "parquet.column.statistics.enabled#id" -> "true",
+    "parquet.column.statistics.enabled#text" -> "true",
+    "parquet.bloom.filter.enabled" -> "true",
+    "parquet.bloom.filter.enabled#text" -> "false",
+    "parquet.bloom.filter.max.bytes" -> "65536",
+    "parquet.bloom.filter.adaptive.enabled" -> "true",
+    "parquet.bloom.filter.candidates.number#name" -> "3",
+    "parquet.bloom.filter.expected.ndv#id" -> "5000",
+    "parquet.bloom.filter.fpp#id" -> "0.05")
+
+  /** A private field, looked up the class hierarchy (spec-only access to
+    * parquet's writer state). */
+  private def field(o: AnyRef, name: String): AnyRef = {
+    var c: Class[_] = o.getClass
+    while (!c.getDeclaredFields.exists(_.getName == name)) c = c.getSuperclass
+    val f = c.getDeclaredField(name)
+    f.setAccessible(true)
+    f.get(o)
+  }
+
+  test("ZstdParquetSink: its writer carries every parquet.* property of the stock writer") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+    import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+    import org.apache.parquet.column.ParquetProperties
+    import org.apache.parquet.schema.MessageType
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOutputWriter}
+    val schema = sinkFrame(1).schema
+    val opts = sinkProps.toMap + ("compression" -> "zstd")
+    // padding is kept only on block file systems: mount the temp dir under viewfs
+    val dir = new java.io.File(tmp())
+    val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
+    conf.set(s"fs.viewfs.mounttable.${dir.getName}.link./w", dir.toURI.toString)
+    opts.foreach { case (k, v) => conf.set(k, v) }
+    def open(format: ParquetFileFormat, name: String) = {
+      val job = Job.getInstance(conf)
+      format.prepareWrite(spark, job, opts, schema).newInstance(s"viewfs://${dir.getName}/w/$name",
+        schema, new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID()))
+    }
+    val stock = open(new ParquetFileFormat, "stock.parquet")
+    val sink = open(new ZstdParquetSink, "sink.parquet")
+    try {
+      val a = field(field(stock.asInstanceOf[ParquetOutputWriter], "recordWriter"), "internalWriter")
+      val b = field(field(sink, "writer"), "writer")
+      Seq("validating", "rowGroupSizeThreshold", "rowGroupRecordCountThreshold").foreach { f =>
+        assert(field(a, f) == field(b, f), f)
+      }
+      def padding(w: AnyRef) = field(field(field(w, "parquetFileWriter"), "alignment"), "maxPaddingSize")
+      assert(padding(a) == padding(b) && padding(a) == Int.box(4096))
+      val cols = field(a, "schema").asInstanceOf[MessageType].getColumns.asScala.toSeq
+      def props(w: AnyRef) = {
+        val p = field(w, "props").asInstanceOf[ParquetProperties]
+        Seq(p.getPageSizeThreshold, p.getPageValueCountThreshold, p.getDictionaryPageSizeThreshold,
+          p.getWriterVersion, p.getMinRowCountForPageSizeCheck, p.getMaxRowCountForPageSizeCheck,
+          p.estimateNextSizeCheck,
+          p.getColumnIndexTruncateLength, p.getStatisticsTruncateLength, p.getRowGroupRowCountLimit,
+          p.getPageRowCountLimit, p.getPageWriteChecksumEnabled, p.getMaxBloomFilterBytes) ++
+          cols.map(c => Seq(c.getPath.toSeq, p.isDictionaryEnabled(c), p.isByteStreamSplitEnabled(c),
+            p.isBloomFilterEnabled(c), p.getBloomFilterNDV(c), p.getBloomFilterFPP(c),
+            p.getAdaptiveBloomFilterEnabled(c), p.getBloomFilterCandidatesCount(c),
+            p.getStatisticsEnabled(c), p.getSizeStatisticsEnabled(c)))
+      }
+      assert(props(a) == props(b))
+    } finally { stock.close(); sink.close() }
+  }
+
+  test("ZstdParquetSink writes the stock writer's parquet: row groups, pages, metadata, rows, bytes") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.metadata.{ColumnChunkMetaData, CompressionCodecName}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    // row-group cuts count compressed page bytes, so the fixture keeps each
+    // column chunk to one page: the cuts then fall on the same rows however
+    // the two codecs' byte counts differ
+    val df = sinkFrame(2500)
+    val base = tmp()
+    ZstdParquetSink.write(df, s"$base/sink", 22, sinkProps: _*)
+    df.write.options(sinkProps.toMap).option("compression", "zstd")
+      .option("parquet.compression.codec.zstd.level", "22").parquet(s"$base/stock")
+    def only(d: String): java.io.File = {
+      val fs = new java.io.File(d).listFiles.filter(_.getName.endsWith(".parquet"))
+      assert(fs.length == 1, d)
+      fs.head
+    }
+    val (fileS, fileK) = (only(s"$base/sink"), only(s"$base/stock"))
+    def open(f: java.io.File) = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(f.toString), spark.sparkContext.hadoopConfiguration))
+    val (rs, rk) = (open(fileS), open(fileK))
+    def pages(c: ColumnChunkMetaData) = {
+      val e = c.getEncodingStats
+      (e.getDictionaryEncodings.asScala.map(x => x -> e.getNumDictionaryPagesEncodedAs(x)).toMap,
+        e.getDataEncodings.asScala.map(x => x -> e.getNumDataPagesEncodedAs(x)).toMap)
+    }
+    try {
+      val (gs, gk) = (rs.getFooter.getBlocks.asScala.toSeq, rk.getFooter.getBlocks.asScala.toSeq)
+      assert(gk.size >= 2, s"the frame must span row groups: ${gk.map(_.getRowCount)}")
+      assert(gs.map(_.getRowCount) == gk.map(_.getRowCount))
+      for ((s, k) <- gs.zip(gk); (cs, ck) <- s.getColumns.asScala.zip(k.getColumns.asScala)) {
+        val at = s"${ck.getPath} in row group ${k.getOrdinal}"
+        assert(cs.getCodec == CompressionCodecName.ZSTD && ck.getCodec == CompressionCodecName.ZSTD, at)
+        assert(cs.getEncodings == ck.getEncodings, at)
+        assert(pages(cs) == pages(ck), at)
+        assert(cs.getStatistics == ck.getStatistics, at)
+        assert(Option(rs.readBloomFilter(cs)).map(_.getBitsetSize) ==
+          Option(rk.readBloomFilter(ck)).map(_.getBitsetSize), at)
+        assert(Option(rs.readColumnIndex(cs)).map(i => (i.getMinValues, i.getMaxValues)) ==
+          Option(rk.readColumnIndex(ck)).map(i => (i.getMinValues, i.getMaxValues)), at)
+      }
+      // the fixture reaches dictionary and plain chunks, bloom filters and a
+      // stats-less column, so the comparisons above are not vacuous
+      val chunks = gk.flatMap(_.getColumns.asScala)
+      assert(chunks.exists(_.getEncodingStats.hasDictionaryPages))
+      assert(chunks.exists(!_.getEncodingStats.hasDictionaryPages))
+      assert(chunks.exists(c => rk.readBloomFilter(c) != null))
+      assert(chunks.exists(_.getStatistics.isEmpty))
+      val (first, firstK) = (rs.readNextRowGroup(), rk.readNextRowGroup())
+      rk.getFooter.getFileMetaData.getSchema.getColumns.asScala.foreach { c =>
+        assert(first.getPageReader(c).readPage().getCrc.isPresent ==
+          firstK.getPageReader(c).readPage().getCrc.isPresent, c.toString)
+      }
+      val (kvS, kvK) = (rs.getFooter.getFileMetaData.getKeyValueMetaData,
+        rk.getFooter.getFileMetaData.getKeyValueMetaData)
+      assert(kvS.keySet == kvK.keySet)
+      assert(kvS.containsKey("org.apache.spark.sql.parquet.row.metadata"))
+    } finally { rs.close(); rk.close() }
+    assert(spark.read.parquet(s"$base/sink").collect().toSeq ==
+      spark.read.parquet(s"$base/stock").collect().toSeq)
+    val (bytesS, bytesK) = (fileS.length, fileK.length)
+    assert(math.abs(bytesS - bytesK) <= bytesK / 100, s"sink $bytesS B vs stock $bytesK B")
+  }
+
+  test("ZstdParquetSink: a write task failing mid-partition commits nothing and frees its codecs") {
+    import scala.jdk.CollectionConverters._
+    val df = sinkFrame(3000)
+    val dir = tmp() + "/fail"
+    def parquetFiles(): Seq[String] = {
+      val root = java.nio.file.Paths.get(dir)
+      if (!java.nio.file.Files.exists(root)) Seq.empty
+      else {
+        val s = java.nio.file.Files.walk(root)
+        try s.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSeq
+        finally s.close()
+      }
+    }
+    val allocated = ZstdParquetSink.allocatedBuffers.get
+    val live = ZstdParquetSink.liveBuffers.get
+    ZstdParquetSink.write(df, dir, 22)
+    assert(ZstdParquetSink.allocatedBuffers.get > allocated, "pages went through the direct codecs")
+    assert(ZstdParquetSink.liveBuffers.get == live, "close released the codec buffers")
+    // small pages: the failing task has compressed pages before it throws
+    val boom = udf { (i: Long) =>
+      if (i == 2000) throw new IllegalStateException("boom mid-partition"); i
+    }
+    val before = ZstdParquetSink.allocatedBuffers.get
+    val err = intercept[Exception] {
+      ZstdParquetSink.write(df.withColumn("id", boom($"id")), dir, 22,
+        "parquet.page.size" -> "4096")
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("boom mid-partition")), err.toString)
+    assert(ZstdParquetSink.allocatedBuffers.get > before, "the failed task compressed pages")
+    assert(ZstdParquetSink.liveBuffers.get == live, "abort closed the writer and its codecs")
+    assert(parquetFiles().isEmpty, parquetFiles().mkString(", "))
+    ZstdParquetSink.write(df, dir, 22)
+    assert(spark.read.parquet(dir).count() == 3000)
+    assert(parquetFiles().size == 1)
+  }
+
   test("mapBounded: concurrent submission, order preserved, failures propagate") {
     import graft.operators.Concurrency
     // all 3 tasks must be in flight at once to pass the barrier
